@@ -34,6 +34,18 @@ FILLER = [
 ]
 LANGS = ["en", "en", "en", "de", "es", "fr", "zh"]
 
+# The long-tail shape: a 50k-word vocabulary with Zipf(1.1) frequencies
+# and ~4% entity density, so the mention and candidate layers see few,
+# sparse hits while scan and segmentation see every word; lognormal(1.6, 1.4)
+# conversation lengths in turns (median ~5), capped at 4,000, so the
+# longest conversations hold a large share of the conv_id shuffle.
+LONGTAIL_VOCAB = 50_000
+LONGTAIL_DENSITY = 0.04
+LONGTAIL_ZIPF_S = 1.1
+LONGTAIL_TURNS_MU = 1.6
+LONGTAIL_TURNS_SIGMA = 1.4
+LONGTAIL_MAX_TURNS = 4000
+
 _SYLLABLES = [c + v for c in "bdfgklmnprstvz" for v in "aeiou"]  # 70
 
 
@@ -117,24 +129,14 @@ def dense(seed: int, n_docs: int, out_dir: str, block: int | None = None) -> str
     return _write(texts, out_dir, rng)
 
 
-def longtail(
-    seed: int,
-    n_docs: int,
-    out_dir: str,
-    vocab: int = 50_000,
-    density: float = 0.04,
-    zipf_s: float = 1.1,
-    turns_mu: float = 1.6,
-    turns_sigma: float = 1.4,
-    max_turns: int = 4000,
-) -> str:
-    """Long-tail corpus: a ``vocab``-word Zipf vocabulary with ~4% entity
-    density, and lognormal conversation lengths (in turns), so a few
-    conversations run to thousands of turns while most are short."""
+def longtail(seed: int, n_docs: int, out_dir: str) -> str:
+    """Long-tail corpus: a Zipf vocabulary with sparse entities and
+    lognormal conversation lengths (the ``LONGTAIL_*`` constants), so a
+    few conversations are long while most are short."""
     rng = np.random.default_rng([seed, 2])
-    words = _vocabulary(vocab)
-    ranks = np.arange(1, vocab + 1, dtype=np.float64)
-    cdf = np.cumsum(ranks ** -zipf_s)
+    words = _vocabulary(LONGTAIL_VOCAB)
+    ranks = np.arange(1, LONGTAIL_VOCAB + 1, dtype=np.float64)
+    cdf = np.cumsum(ranks ** -LONGTAIL_ZIPF_S)
     cdf /= cdf[-1]
     # lognormal quantiles: the same multiset of conversation lengths
     # for every seed, in a seeded order
@@ -142,13 +144,19 @@ def longtail(
 
     z = np.array([NormalDist().inv_cdf((i + 0.5) / n_docs) for i in range(n_docs)])
     turns = rng.permutation(
-        np.clip(np.round(np.exp(turns_mu + turns_sigma * z)), 1, max_turns).astype(int)
+        np.clip(
+            np.round(np.exp(LONGTAIL_TURNS_MU + LONGTAIL_TURNS_SIGMA * z)),
+            1,
+            LONGTAIL_MAX_TURNS,
+        ).astype(int)
     )
 
     def zipf_words(k: int):
         return words[np.searchsorted(cdf, rng.random(k))]
 
-    texts = [_mix(rng, int(t) * TURN_WORDS, density, zipf_words) for t in turns]
+    texts = [
+        _mix(rng, int(t) * TURN_WORDS, LONGTAIL_DENSITY, zipf_words) for t in turns
+    ]
     return _write(texts, out_dir, rng)
 
 

@@ -55,12 +55,31 @@ def tree_pss_mb(root_pid: int) -> float:
     return total / 1024.0
 
 
+def cpu_ticks() -> list[int]:
+    """The host's aggregate CPU time counters (the ``cpu`` line of
+    ``/proc/stat``: user, nice, system, idle, iowait, irq, softirq,
+    steal, ...)."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
+
+
+def steal_share(before: list[int], after: list[int]) -> float:
+    """Share of CPU time between two :func:`cpu_ticks` readings that the
+    hypervisor gave to other guests (steal): how contended the host was."""
+    d = [a - b for a, b in zip(after[:8], before[:8])]
+    return d[7] / sum(d) if sum(d) > 0 else 0.0
+
+
+# one /proc walk per second: peaks last for whole builds, and a walk of
+# the JVM plus a few Python workers costs well under a millisecond
+SAMPLE_INTERVAL_S = 1.0
+
+
 class MemorySampler:
     """Background sampler of :func:`tree_pss_mb`; ``peak_mb`` is the
     highest sum seen from the first :meth:`watch` until :meth:`stop`."""
 
-    def __init__(self, interval: float = 1.0):
-        self.interval = interval
+    def __init__(self):
         self.peak_mb = 0.0
         self._pids: list[int] = []
         self._stop = threading.Event()
@@ -79,7 +98,7 @@ class MemorySampler:
         self.peak_mb = max(self.peak_mb, sum(tree_pss_mb(p) for p in self._pids))
 
     def _run(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(SAMPLE_INTERVAL_S):
             self.sample()
 
     def stop(self) -> None:

@@ -96,7 +96,8 @@ def main(argv: list[str] | None = None) -> int:
     print(json.dumps({k: info[k] for k in ("nproc", "cores", "mem_total_mb", "driver_mem")}
                      | {k: info.get(k) for k in ("corpus", "latency_tail_s",
                                                  "latency_tail_percentile",
-                                                 "latency_samples")}))
+                                                 "latency_samples", "steal_share_run",
+                                                 "steal_share_timed")}))
     print(json.dumps(result))
     return 0
 
