@@ -588,7 +588,11 @@ def _window_structures(key: tuple, tokenize):
     if hit is not None:
         return hit if hit != () else None
     if len(_win_cache) >= _WIN_CACHE_MAX:
+        # cleared together: a window still memoized here whose
+        # _tree_arrays entry is gone would take tree_mean_states' slow
+        # per-row level fallback until the window cache itself cleared
         _win_cache.clear()
+        _tree_arrays.clear()
     if tokenize is None:
         sent_words = [s.split(" ") if s and s.strip() else [] for s in key]
     else:
@@ -617,8 +621,6 @@ def _window_structures(key: tuple, tokenize):
             pu = parents[u]
             if pu < n and l[u] + 1 > l[pu]:
                 l[pu] = l[u] + 1
-    if len(_tree_arrays) >= _WIN_CACHE_MAX:
-        _tree_arrays.clear()
     _tree_arrays[id(parents)] = (
         parents,
         np.asarray(parents, dtype=np.int64),

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from . import graph_incore
 
 JACCARD_TAU = 0.5
@@ -230,7 +231,8 @@ def connected_components(
         if len(head) <= driver_threshold:
             surfaces = [r[0] for r in head]
             pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-            return nodes.sparkSession.createDataFrame(
+            return local_frame(
+                nodes.sparkSession,
                 _uf_components(surfaces, pairs),
                 schema="surface string, component string",
             )
@@ -238,7 +240,8 @@ def connected_components(
     if n_nodes <= driver_threshold:
         surfaces = [r[0] for r in nodes.select("surface").collect()]
         pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-        return nodes.sparkSession.createDataFrame(
+        return local_frame(
+            nodes.sparkSession,
             _uf_components(surfaces, pairs),
             schema="surface string, component string",
         )
@@ -359,7 +362,8 @@ def canonicalize(mentions: DataFrame) -> DataFrame:
     else:
         edges = similarity_edges(nodes, n_nodes=n)
         pairs = [(r[0], r[1]) for r in edges.select("src", "dst").collect()]
-    return mentions.sparkSession.createDataFrame(
+    return local_frame(
+        mentions.sparkSession,
         _uf_components(surfaces, pairs), schema="surface string, component string"
     )
 
@@ -503,7 +507,8 @@ def canonicalize_incremental(
     if len(head) <= driver_threshold:
         nhead = news.limit(driver_threshold + 1 - len(head)).collect()
         if len(head) + len(nhead) <= driver_threshold:
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 _py_incremental(
                     {r[0]: r[1] for r in head}, [r[0] for r in nhead], tau
                 ),
@@ -776,7 +781,8 @@ def kg_pagerank(
                 iters,
                 PAGERANK_SCALE,
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows, "node string, pr bigint"
             )
         nodes = track_cache(
@@ -1217,7 +1223,8 @@ def kg_communities(
             rows = graph_incore.lpa(
                 [(r.subj, r.obj) for r in base.collect()], iters
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows, "node string, label string"
             )
         directed = base.select(
@@ -1604,7 +1611,7 @@ def kg_paths(
             rows = graph_incore.bfs_layers(
                 [(r.subj, r.obj) for r in edges.collect()], max_hops
             )
-            return spark.createDataFrame(rows, "node string, dist int")
+            return local_frame(spark, rows, "node string, dist int")
         hub = (
             edges.groupBy("subj")
             .agg(F.count("*").alias("deg"))
@@ -1613,8 +1620,9 @@ def kg_paths(
             .collect()
         )
         if not hub:
-            return spark.createDataFrame([], "node string, dist int")
-        dist = spark.createDataFrame(
+            return local_frame(spark, [], "node string, dist int")
+        dist = local_frame(
+            spark,
             [(hub[0]["subj"], 0)], "node string, dist int"
         ).localCheckpoint(eager=release)
         frontier = dist
@@ -1736,7 +1744,8 @@ def kg_kcore(
             rows = graph_incore.kcore(
                 [(r.src, r.dst) for r in edges.collect()], k, rounds
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows,
                 T.StructType(
                     [
@@ -1891,7 +1900,8 @@ def kg_walks(
                 length,
                 max_nbrs,
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows,
                 T.StructType(
                     [
@@ -2474,7 +2484,8 @@ def kg_ppr(
                 PAGERANK_SCALE,
                 n_seeds,
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows, "node string, ppr bigint"
             )
         outdeg = track_cache(
@@ -2665,7 +2676,8 @@ def kg_ktruss(
             rows = graph_incore.ktruss(
                 [(r.u, r.v) for r in und.collect()], k, rounds
             )
-            return kg.sparkSession.createDataFrame(
+            return local_frame(
+                kg.sparkSession,
                 rows,
                 T.StructType(
                     [

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import alias_rows, duck_alias_values
+from ..session import local_frame
 
 
 _ALIAS_DF_CACHE: dict[int, DataFrame] = {}
@@ -38,7 +39,8 @@ def alias_df(spark: SparkSession) -> DataFrame:
     key = spark.sparkContext.applicationId  # unique per live context
     df = _ALIAS_DF_CACHE.get(key)
     if df is None:
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             alias_rows(), schema="surface string, entity_id string, ner_tag string"
         )
         _ALIAS_DF_CACHE.clear()  # one live session at a time in practice

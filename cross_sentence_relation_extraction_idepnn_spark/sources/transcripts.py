@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import read_parquet_cached
+from ..session import plan_memo, read_parquet_cached
 
 TURN_WORDS = 8
 EPOCH_2024 = 1704067200  # 2024-01-01T00:00:00Z
@@ -33,9 +33,6 @@ EPOCH_2024 = 1704067200  # 2024-01-01T00:00:00Z
 
 def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_cached(spark, f"{sf_dir}/documents.parquet")
-
-
-_FANOUT_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,22 +43,22 @@ def _fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize the whole turn derivation into one task (measured:
     1.2 s of a 7.7 s sf0.1 run). A production corpus has
     >> parallelism file splits, so the repartition (and its shuffle of
-    the raw text) never triggers there. Memoized — the partition-count
-    probe costs an RDD conversion."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _FANOUT_CACHE.get(key)
-    if df is None:
-        df = documents(spark, sf_dir)
-        par = spark.sparkContext.defaultParallelism
-        n = df.rdd.getNumPartitions()
-        # only when it genuinely adds parallelism (at local[1] a 1→1
-        # repartition would be a pure-overhead shuffle — and would
-        # artificially slow the scaling block's low side)
-        if n < max(par // 2, 2) and par > n:
-            df = df.repartition(par, "doc_id")
-        if len(_FANOUT_CACHE) > 64:
-            _FANOUT_CACHE.clear()
-        _FANOUT_CACHE[key] = df
+    the raw text) never triggers there. Plan-memoized — the
+    partition-count probe costs an RDD conversion."""
+    return plan_memo(
+        spark, ("fanned_documents", sf_dir), lambda: _fan_out(spark, sf_dir)
+    )
+
+
+def _fan_out(spark: SparkSession, sf_dir: str) -> DataFrame:
+    df = documents(spark, sf_dir)
+    par = spark.sparkContext.defaultParallelism
+    n = df.rdd.getNumPartitions()
+    # only when it genuinely adds parallelism (at local[1] a 1→1
+    # repartition would be a pure-overhead shuffle — and would
+    # artificially slow the scaling block's low side)
+    if n < max(par // 2, 2) and par > n:
+        df = df.repartition(par, "doc_id")
     return df
 
 
@@ -79,8 +76,6 @@ def transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Plan-memoized (r6): every pipeline-prefix consumer receives the
     # SAME lazy DataFrame object, which lets downstream operators
     # memoize on input identity (session.input_plan_memo).
-    from ..session import plan_memo
-
     return plan_memo(
         spark, ("transcripts", sf_dir), lambda: _transcripts_build(spark, sf_dir)
     )

@@ -22,6 +22,13 @@ stateful ``applyInPandasWithState`` operator that buffers turns per
 ``conv_id`` and releases the WHOLE conversation on gap timeout —
 in front of the extraction stage. Both the split-loss and the
 buffered recovery are demonstrated in ``tests/test_streaming.py``.
+
+Per-batch resource release: each ``foreachBatch`` body runs inside
+``session.cache_scope(bdf)``, so the batch's persisted sentence table
+is unpersisted and the plan memos built on the micro-batch DataFrame
+(segment → detect_mentions → scoring, which pin it) are dropped when
+the batch commits. A long-running stream therefore holds no more
+cached RDDs or memo entries after N batches than after one (tested).
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import MAX_K, SCORE_THRESHOLD
+from ..session import cache_scope, local_frame
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -203,10 +211,11 @@ def run_stream_triples(
     from ..plans.pipeline import triples_from_transcripts
 
     def one_batch(bdf: DataFrame, batch_id: int) -> None:
-        out = triples_from_transcripts(
-            spark, bdf, threshold=threshold, max_k=max_k, weights=weights
-        )
-        write_triples_batch(out, batch_id, sink_dir)
+        with cache_scope(bdf):
+            out = triples_from_transcripts(
+                spark, bdf, threshold=threshold, max_k=max_k, weights=weights
+            )
+            write_triples_batch(out, batch_id, sink_dir)
 
     src = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if max_files_per_trigger:
@@ -325,7 +334,7 @@ def run_stream_kg(
         elif canon is not None:
             prev = canon.select("surface", "component")
         else:
-            prev = spark.createDataFrame([], CANON_SCHEMA)
+            prev = local_frame(spark, [], CANON_SCHEMA)
         surfaces = detect_mentions(spark, segment(bdf)).select("surface")
         ext = canonicalize_incremental(prev, surfaces).select(
             "surface", "component"
@@ -336,27 +345,28 @@ def run_stream_kg(
         )
 
     def one_batch(bdf: DataFrame, batch_id: int) -> None:
-        batch_map = _batch_canon(bdf, batch_id) if extend_canon else canon
-        delta = dedup_triples(
-            rekey_canonical(
-                triples_from_transcripts(
-                    spark, bdf, threshold=threshold, max_k=max_k, weights=weights
-                ),
-                batch_map,
+        with cache_scope(bdf):
+            batch_map = _batch_canon(bdf, batch_id) if extend_canon else canon
+            delta = dedup_triples(
+                rekey_canonical(
+                    triples_from_transcripts(
+                        spark, bdf, threshold=threshold, max_k=max_k, weights=weights
+                    ),
+                    batch_map,
+                )
             )
-        )
-        prev = _latest_kg_version(spark, kg_dir, below=int(batch_id))
-        if prev is None:
-            merged = delta
-        else:
-            existing = spark.read.schema(KG_SCHEMA).parquet(f"{kg_dir}/v={prev}")
-            merged = merge_kg_tables(existing, delta)
-        merged.select(
-            "subj", "pred", "obj",
-            F.col("support").cast("bigint").alias("support"),
-            F.col("max_score").cast("double").alias("max_score"),
-            F.col("min_k").cast("int").alias("min_k"),
-        ).write.mode("overwrite").parquet(f"{kg_dir}/v={int(batch_id)}")
+            prev = _latest_kg_version(spark, kg_dir, below=int(batch_id))
+            if prev is None:
+                merged = delta
+            else:
+                existing = spark.read.schema(KG_SCHEMA).parquet(f"{kg_dir}/v={prev}")
+                merged = merge_kg_tables(existing, delta)
+            merged.select(
+                "subj", "pred", "obj",
+                F.col("support").cast("bigint").alias("support"),
+                F.col("max_score").cast("double").alias("max_score"),
+                F.col("min_k").cast("int").alias("min_k"),
+            ).write.mode("overwrite").parquet(f"{kg_dir}/v={int(batch_id)}")
 
     src = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if max_files_per_trigger:

@@ -352,6 +352,9 @@ def save_weights(weights: dict[str, np.ndarray], path: str = ARTIFACT) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         json.dump(kernels.weights_to_lists(weights), f)
+    # the next load_weights(path) must see the file just written, not
+    # the memoized pre-training weights
+    _WEIGHTS_CACHE.pop(path, None)
 
 
 _WEIGHTS_CACHE: dict[str, dict] = {}

@@ -439,3 +439,32 @@ def test_tree_arrays_cache_matches_fallback_levels():
                 l[pu] = l[u] + 1
     assert np.array_equal(ent[1], np.asarray(parents))
     assert np.array_equal(ent[2], np.asarray(l[:n]))
+
+
+def test_window_cache_clear_takes_tree_arrays_with_it(monkeypatch):
+    """A capacity clear of the window memo must clear _tree_arrays in
+    the same step: a window re-memoized after the clear must find its
+    per-window tree arrays (the fast path), and featurization output
+    must not change across the clear."""
+    from cross_sentence_relation_extraction_idepnn_spark import kernels
+
+    win = ["the scan reads rows", "a table joins a row"]
+    before = kernels.featurize_window(win, 0, 1, 1, 1, 0)
+    # a blank window memoizes () with no tree arrays, so the window
+    # memo is strictly larger and reaches capacity first
+    assert kernels.featurize_window(["scan runs", "", "a table"], 0, 0, 2, 1, 0) is None
+    monkeypatch.setattr(kernels, "_WIN_CACHE_MAX", len(kernels._win_cache))
+    # the next miss hits capacity and clears both memos
+    kernels.featurize_window(["tool call returns", "code runs"], 0, 0, 1, 1, 0)
+    assert len(kernels._win_cache) == 1
+    assert len(kernels._tree_arrays) == 1
+    after = kernels.featurize_window(win, 0, 1, 1, 1, 0)
+    assert after == before
+    # the re-memoized window's arrays are back, keyed on its parents
+    ent = kernels._tree_arrays[id(after["parents"])]
+    assert ent[0] is after["parents"]
+    assert len(kernels._tree_arrays) == 2
+    # every memoized window has its tree arrays
+    for hit in kernels._win_cache.values():
+        if hit != ():
+            assert kernels._tree_arrays[id(hit[3])][0] is hit[3]

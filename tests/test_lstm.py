@@ -77,3 +77,24 @@ def test_lstm_matches_loop_oracle():
         logits = hbi @ W["W_hy"] + W["b_y"]
         e = np.exp(logits - logits.max())
         np.testing.assert_allclose(got[b], e / e.sum(), rtol=1e-10, atol=1e-12)
+
+
+def test_save_weights_then_load_weights_returns_new_weights(tmp_path):
+    """train → save_weights → load_weights in one process must return
+    the trained weights, not the memoized ones from before training."""
+    from cross_sentence_relation_extraction_idepnn_spark import training
+
+    path = str(tmp_path / "weights.json")
+    base = training.load_weights(path)  # no file yet: memoized init
+    rng = np.random.RandomState(5)
+    d = base["W_hy_adp"].shape[0]
+    feats = rng.randn(16, d)
+    labels = rng.randint(0, K.N_CLASSES, size=16)
+    trained = training.train_head(feats, labels, base)
+    assert not np.array_equal(trained["W_hy_adp"], base["W_hy_adp"])
+    training.save_weights(trained, path)
+    got = training.load_weights(path)
+    assert set(got) == set(trained)
+    for k in trained:
+        np.testing.assert_array_equal(got[k], trained[k])
+    assert training.load_weights(path) is got  # memoized again

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -1044,3 +1045,154 @@ def test_session23_wave_plan_shapes(spark, sf_dir):
         assert count_op(plan, "Window") == 1, plan
         assert "Join" not in plan, plan
         assert "EvalPython" not in plan, plan
+
+
+# --------------------------------------- driver-built tables (local_frame)
+
+def _optimized_root(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+def test_alias_dictionary_is_local_relation(spark):
+    from cross_sentence_relation_extraction_idepnn_spark.operators.mentions import (
+        alias_df,
+    )
+
+    assert _optimized_root(alias_df(spark)) == "LocalRelation"
+
+
+def test_incore_canonical_maps_are_local_relations(spark):
+    """The in-core canonicalization results (the maps every KG build
+    broadcasts and every streamed delta writes) must plan as JVM
+    LocalRelations, not scans of a Python RDD."""
+    from cross_sentence_relation_extraction_idepnn_spark.operators.linking import (
+        canonicalize,
+        canonicalize_incremental,
+        connected_components,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.session import local_frame
+
+    surf = local_frame(
+        spark, [("postgres",), ("postgresql",), ("redis",)], "surface string"
+    )
+    canon = canonicalize(surf)
+    assert _optimized_root(canon) == "LocalRelation"
+    edges = local_frame(spark, [("postgres", "postgresql")], "src string, dst string")
+    cc = connected_components(surf, edges)
+    assert _optimized_root(cc) == "LocalRelation"
+    assert sorted(map(tuple, cc.collect())) == [
+        ("postgres", "postgres"), ("postgresql", "postgres"), ("redis", "redis"),
+    ]
+    news = local_frame(spark, [("redis",), ("rediss",)], "surface string")
+    inc = canonicalize_incremental(canon, news)
+    assert _optimized_root(inc) == "LocalRelation"
+    assert {r.surface for r in inc.collect()} == {
+        "postgres", "postgresql", "redis", "rediss",
+    }
+
+
+def test_local_frame_empty_nulls_and_int_columns(spark):
+    from pyspark.sql import types as T
+
+    from cross_sentence_relation_extraction_idepnn_spark.session import local_frame
+
+    empty = local_frame(spark, [], "node string, dist int")
+    assert _optimized_root(empty) == "LocalRelation"
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<node:string,dist:int>"
+
+    rows = [("a", None, 1, 2**40), (None, "x", None, -3)]
+    df = local_frame(spark, rows, "s string, t string, i int, b bigint")
+    assert _optimized_root(df) == "LocalRelation"
+    assert [tuple(r) for r in df.collect()] == rows
+    assert [f.dataType for f in df.schema.fields] == [
+        T.StringType(), T.StringType(), T.IntegerType(), T.LongType(),
+    ]
+    # StructType schemas keep their nullability
+    st = T.StructType([T.StructField("deg", T.LongType(), False)])
+    nn = local_frame(spark, [(3,), (4,)], st)
+    assert _optimized_root(nn) == "LocalRelation"
+    assert nn.schema == st and [r.deg for r in nn.collect()] == [3, 4]
+
+
+_PY_OPS = re.compile(
+    r"^\(\d+\) (\w*(?:Python|InPandas|InArrow)\w*)", flags=re.MULTILINE
+)
+
+
+@pytest.mark.parametrize("which", ["materialize_kg", "triples_from_transcripts"])
+def test_fast_path_plans_have_no_python_rdd_scan(spark, sf_dir, which):
+    """The only Python in a KG build is the fused featurize+score
+    kernel: no driver-built table may be scanned from a Python RDD."""
+    from cross_sentence_relation_extraction_idepnn_spark.plans import pipeline
+
+    if which == "materialize_kg":
+        df = pipeline._materialize_kg_fresh(spark, sf_dir)
+    else:
+        df = pipeline.triples_from_transcripts(spark, transcripts(spark, sf_dir))
+    # the whole text: the persisted sentence/mention subtrees print
+    # their own nested Initial Plan sections, which plan_of cuts at
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    plan = buf.getvalue()
+    assert "applySchemaToPythonRDD" not in plan
+    assert "LocalTableScan" in plan  # the alias dictionary (+ canon map)
+    assert set(_PY_OPS.findall(plan)) == {"MapInPandas"}
+
+
+def test_no_python_row_create_dataframe_in_package():
+    """Every driver-built DataFrame goes through session.local_frame:
+    no other ``createDataFrame(`` call may appear in the package."""
+    import ast
+    import pathlib
+
+    import cross_sentence_relation_extraction_idepnn_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame":
+                allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert found == []
+
+
+def test_invalidate_parquet_cache_drops_plans_on_stale_reader(
+    spark, sf_dir, tmp_path
+):
+    """Rewriting a corpus path mid-session: after invalidation, the
+    memoized transcripts → segment chain must see the new rows."""
+    import pyarrow.parquet as pq
+
+    from cross_sentence_relation_extraction_idepnn_spark.session import (
+        invalidate_parquet_cache,
+    )
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    doc_ids = docs.column("doc_id").to_pylist()
+    sf = str(tmp_path)
+    path = f"{sf}/documents.parquet"
+    (tmp_path / "documents.parquet").mkdir()
+
+    def conv_ids() -> set[str]:
+        sents = segment(transcripts(spark, sf))
+        return {r.conv_id for r in sents.select("conv_id").distinct().collect()}
+
+    pq.write_table(docs.slice(0, 40), f"{path}/part-0.parquet")
+    assert conv_ids() == {f"conv-{i}" for i in doc_ids[:40]}
+    # a rewrite replaces the file listing, not just the bytes
+    (tmp_path / "documents.parquet" / "part-0.parquet").unlink()
+    pq.write_table(docs.slice(40, 60), f"{path}/part-1.parquet")
+    invalidate_parquet_cache(path)
+    assert conv_ids() == {f"conv-{i}" for i in doc_ids[40:100]}

@@ -3,6 +3,8 @@ input, and the custom stateful sessionizer."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -767,3 +769,62 @@ def test_stream_cdc_equals_batch_and_replay_idempotent(spark, sf_dir, tmp_path):
     )
     again = {tuple(r) for r in read_latest_cdc(spark, state_dir).collect()}
     assert again == want
+
+
+def test_stream_batches_release_their_caches_and_plan_memos(spark, sf_dir, tmp_path):
+    """Each micro-batch's persisted sentence table and the plan memos
+    built on the micro-batch DataFrame are released when the batch
+    commits: after three batches the context holds as many persistent
+    RDDs (and the session as many plan memos) as before the stream,
+    and the streamed KG still equals the rebuild."""
+    from cross_sentence_relation_extraction_idepnn_spark import session
+    from cross_sentence_relation_extraction_idepnn_spark.operators.linking import (
+        dedup_triples,
+        rekey_canonical,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.plans.pipeline import (
+        triples_from_transcripts,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.sources.transcripts import (
+        transcripts,
+    )
+    from cross_sentence_relation_extraction_idepnn_spark.streaming.triples import (
+        read_latest_kg,
+        run_stream_kg,
+        run_stream_triples,
+    )
+
+    src = str(tmp_path / "turns")
+    canon_dir = str(tmp_path / "canon")
+    tdf = transcripts(spark, sf_dir)
+    tdf.repartition(3, "conv_id").write.parquet(src)
+    jsc = spark.sparkContext._jsc
+
+    def held() -> tuple[int, int]:
+        return jsc.getPersistentRDDs().size(), len(session._PLAN_CACHE)
+
+    before = held()
+    run_stream_kg(
+        spark, src, str(tmp_path / "kg"), str(tmp_path / "ckpt_kg"),
+        max_files_per_trigger=1, extend_canon=True, canon_dir=canon_dir,
+    )
+    assert len(os.listdir(canon_dir)) == 3  # one canon version per batch
+    assert held() == before
+    run_stream_triples(
+        spark, src, str(tmp_path / "sink"), str(tmp_path / "ckpt_tr"),
+        max_files_per_trigger=1,
+    )
+    assert held() == before
+
+    v = max(int(d.split("=")[1]) for d in os.listdir(canon_dir))
+    final_map = spark.read.parquet(f"{canon_dir}/v={v}")
+    want = dedup_triples(
+        rekey_canonical(triples_from_transcripts(spark, tdf), final_map)
+    ).toPandas()
+    got = read_latest_kg(spark, str(tmp_path / "kg")).toPandas()
+    cols = sorted(want.columns)
+    pd.testing.assert_frame_equal(
+        got[cols].sort_values(cols).reset_index(drop=True),
+        want[cols].sort_values(cols).reset_index(drop=True),
+        check_dtype=False,
+    )
